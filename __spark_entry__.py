@@ -1464,8 +1464,9 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
 def release_session_caches() -> None:
     """Unpersist and drop EVERY session-scoped memoized artifact in one call:
     minhash candidate pairs, the SemDeDup assignment frame, the IVFPQ trained
-    model's encoded frame, the on-disk BM25 index directories, and the
-    curation flagship's persisted stage boundaries.  A long-lived driver
+    model's encoded frame, the on-disk BM25 index directories, the
+    curation flagship's persisted stage boundaries, and the prepared-plan
+    memos of the synthetic generators and ``token_features``.  A long-lived Spark
     session (a notebook, a multi-tenant job server) calls this at pipeline
     teardown so executor storage and scratch disk are reclaimed without
     restarting the app."""
@@ -1516,6 +1517,11 @@ def release_session_caches() -> None:
         except Exception:
             pass
     _CURATION_PERSISTS.clear()
+    from transmog_spark import pipeline
+    from transmog_spark.sources import synth
+
+    synth._SEQUENCES_PLANS.clear()
+    pipeline._TOKEN_FEATURES_PLANS.clear()
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

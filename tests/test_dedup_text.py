@@ -6,6 +6,8 @@ import hashlib
 import math
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from transmog_spark.operators.dedup import (
@@ -63,6 +65,28 @@ def test_word_shingles_short_text_fallback(spark):
     df = spark.createDataFrame([("one two",)], "t string")
     sh = df.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0].s
     assert sh == ["one two"]
+
+
+_WS = " \t\n\r\x0b\x0c"
+_texts = st.one_of(
+    st.none(),
+    st.text(alphabet=_WS, max_size=8),
+    st.text(max_size=40),
+    st.lists(st.text(alphabet="abc", min_size=1, max_size=3), max_size=8).map(" ".join),
+)
+
+
+@given(st.lists(_texts, min_size=1, max_size=20), st.integers(min_value=1, max_value=5))
+@settings(max_examples=25, deadline=None)
+def test_word_shingles_never_null_or_empty(spark, texts, n):
+    """The unfiltered explode_outer sites over word_shingles (source_overlap,
+    decontaminate_fuzzy, minhash_signatures) rely on it returning a
+    non-empty array for every text, NULL, empty and whitespace-only too."""
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = df.select("i", word_shingles(F.col("t"), n).alias("s")).collect()
+    assert len(got) == len(texts)
+    for r in got:
+        assert r.s is not None and len(r.s) > 0, (texts[r.i], n, r.s)
 
 
 def test_minhash_finds_near_and_exact_dups(docs):

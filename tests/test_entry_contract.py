@@ -57,3 +57,16 @@ def test_release_session_caches(spark, sf_dir):
     assert not entrymod._PAIRS_CACHE
     assert not entrymod._BM25_INDEX_CACHE
     assert not entrymod._CURATION_PERSISTS
+
+
+def test_release_session_caches_drops_plan_memos(spark):
+    """The generator and token_features plan memos pin the session's plan
+    objects; teardown must drop them with the other session caches."""
+    from transmog_spark import pipeline
+    from transmog_spark.sources import synth
+
+    pipeline.token_features(spark, 50)
+    assert synth._SEQUENCES_PLANS and pipeline._TOKEN_FEATURES_PLANS
+    entrymod.release_session_caches()
+    assert not synth._SEQUENCES_PLANS
+    assert not pipeline._TOKEN_FEATURES_PLANS

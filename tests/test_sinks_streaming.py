@@ -41,6 +41,99 @@ def test_save_tables_parquet_roundtrip(spark, nested_df, tmp_path):
     assert sorted(r.v for r in items.collect()) == [1, 2, 3]
 
 
+@pytest.fixture(scope="module")
+def wide_df(spark):
+    """Three child tables: a struct array holding a nested array, and a
+    primitive array."""
+    return spark.createDataFrame(
+        [
+            Row(rid=1, items=[Row(v=1, subs=[10, 11]), Row(v=2, subs=[])], tags=["x", "y"]),
+            Row(rid=2, items=[Row(v=3, subs=[12])], tags=["z"]),
+            Row(rid=3, items=[], tags=[]),
+        ],
+        "rid long, items array<struct<v:long, subs:array<long>>>, tags array<string>",
+    )
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_save_tables_persists_source_once_and_keeps_table_order(spark, wide_df, tmp_path):
+    from pyspark import StorageLevel
+
+    res = flatten(wide_df, "ent", EngineConfig(array_mode="separate", id_generation="hash"))
+    assert len(res.all_tables) == 4
+    cached_during = []
+    paths = save_tables(
+        res,
+        str(tmp_path),
+        "parquet",
+        lambda done, total: cached_during.append(res.source.storageLevel != StorageLevel.NONE),
+    )
+    assert paths == [str(tmp_path / sanitize_filename(n)) for n in res.all_tables]
+    assert cached_during == [True] * 4
+    assert res.source.storageLevel == StorageLevel.NONE
+
+
+def test_save_tables_child_failure_raises_after_other_writes(spark, wide_df, tmp_path):
+    res = flatten(wide_df, "ent", EngineConfig(array_mode="separate", id_generation="hash"))
+    names = list(res.all_tables)
+    failing = names[1]
+    (tmp_path / failing).mkdir()
+    before = _persistent_rdds(spark)
+    with pytest.raises(Exception, match="already exists|PATH_ALREADY_EXISTS"):
+        save_tables(res, str(tmp_path), "parquet", mode="error")
+    for name in names:
+        if name != failing:
+            assert (tmp_path / name / "_SUCCESS").exists(), name
+    assert not (tmp_path / failing / "_SUCCESS").exists()
+    assert _persistent_rdds(spark) == before
+
+
+def test_save_tables_leaves_caller_cache_alone(spark, tmp_path):
+    from pyspark import StorageLevel
+
+    df = spark.createDataFrame(
+        [Row(rid=1, items=[Row(v=1)]), Row(rid=2, items=[Row(v=2), Row(v=3)])]
+    ).cache()
+    df.count()
+    try:
+        res = flatten(df, "ent", EngineConfig(id_generation="natural", id_field="rid", time_field=None))
+        assert res.source is df
+        res.save(str(tmp_path), "parquet")
+        assert df.is_cached and df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()
+
+
+def test_save_tables_writes_inherit_job_group(spark, wide_df, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    res = flatten(wide_df, "ent", EngineConfig(array_mode="separate", id_generation="hash"))
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "save under a job group")
+    try:
+        res.save(str(tmp_path), "parquet")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup("g")) >= len(res.all_tables)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+@pytest.mark.parametrize("ids", ["hash", "random"])
+def test_saved_children_link_to_saved_main(spark, wide_df, tmp_path, ids):
+    res = flatten(wide_df, "ent", EngineConfig(array_mode="separate", id_generation=ids))
+    paths = res.save(str(tmp_path), "parquet")
+    main_ids = {r._id for r in spark.read.parquet(paths[0]).collect()}
+    assert len(main_ids) == 3 and None not in main_ids
+    for p in paths[1:]:
+        parents = [r._parent_id for r in spark.read.parquet(p).select("_parent_id").collect()]
+        assert parents and set(parents) <= main_ids, p
+
+
 def test_csv_and_orc_roundtrip(spark, nested_df, tmp_path):
     flat = nested_df.select("rid", "name")
     for fmt in ("csv", "orc", "json"):

@@ -63,19 +63,26 @@ class FlattenResult:
     """Flattened output: main DataFrame + child DataFrames by table name.
 
     Mirrors the reference's FlattenResult (api.py:26-179) with DataFrames
-    in place of row lists.
+    in place of row lists.  ``source`` is the id-bearing frame every table
+    derives from; ``save`` evaluates it once (see ``sinks.save_tables``):
+    persisted for the writes unless the caller already cached it, main
+    table first to fill the cache, then the children concurrently, so each
+    running task holds one pandas-UDF buffer (the child id's) rather than
+    re-running the root-id UDF beside it.
     """
 
     entity_name: str
     main: DataFrame
     tables: dict[str, DataFrame] = dc_field(default_factory=dict)
+    source: DataFrame | None = None
 
     @property
     def all_tables(self) -> dict[str, DataFrame]:
         return {self.entity_name: self.main, **self.tables}
 
     def save(self, path: str, output_format: str = "parquet", **options) -> list[str]:
-        """Write every table under ``path`` (reference save dispatcher W9)."""
+        """Write every table under ``path`` (reference save dispatcher W9);
+        no frame stays persisted after it returns."""
         from transmog_spark.sinks import save_tables
 
         return save_tables(self, path, output_format, **options)
@@ -128,7 +135,7 @@ def flatten(
 
     tables: dict[str, DataFrame] = {}
     _extract_children(df0, F.col(root_id_name), plan.arrays, entity, cfg, ts, tables)
-    return FlattenResult(entity_name=entity, main=main, tables=tables)
+    return FlattenResult(entity_name=entity, main=main, tables=tables, source=df0)
 
 
 def _merge_child(tables: dict[str, DataFrame], name: str, df: DataFrame) -> None:

@@ -6,21 +6,22 @@ execution, spill-to-disk), so ``flatten_stream`` here is flatten + write.
 
 For genuine event streams, ``flatten_readstream`` wires the same plan into
 Structured Streaming via ``foreachBatch``: each micro-batch is flattened
-with one shared ``run_ts`` per batch and appended per table — the
+with one shared ``run_ts`` per batch and appended per table through
+``sinks.save_tables``, which evaluates the batch once for all its tables
+(Spark's foreachBatch pattern for writing to several sinks). The
 first-batch-schema-freeze of the reference's writers (arrow_base.py:364-371)
 becomes Spark's native fixed streaming schema.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
 from transmog_spark.config import EngineConfig
-from transmog_spark.operators.flatten import FlattenResult, current_run_timestamp, flatten
-from transmog_spark.sinks import sanitize_filename, write_table
+from transmog_spark.operators.flatten import current_run_timestamp, flatten
+from transmog_spark.sinks import save_tables
 
 
 _DRIFT_MODES = {"strict", "drop"}
@@ -52,23 +53,17 @@ def flatten_stream(
 ) -> list[str]:
     """Flatten and write straight to disk (reference P2 semantics).
 
-    One ``extract_time`` for the whole run (api.py:238-239). The progress
-    callback fires once per table with (rows_written, total) — Spark's unit
-    of progress is the table/stage, not the 100-row batch of the reference.
+    One ``extract_time`` for the whole run (api.py:238-239). Writes go
+    through ``sinks.save_tables``; the progress callback fires once per
+    finished table with (tables_written, total) — Spark's unit of progress
+    is the table/stage, not the 100-row batch of the reference.
     ``on_schema_drift`` ('strict'|'drop') is accepted for reference-config
     parity; see ``_check_drift_mode``.
     """
     _check_drift_mode(on_schema_drift)
     cfg = config or EngineConfig()
     result = flatten(df, entity_name, cfg, run_ts=current_run_timestamp())
-    written: list[str] = []
-    tables = result.all_tables
-    for name, table in tables.items():
-        target = os.path.join(output_path, sanitize_filename(name))
-        written.append(write_table(table, target, output_format, **options))
-        if progress_callback is not None:
-            progress_callback(len(written), len(tables))
-    return written
+    return save_tables(result, output_path, output_format, progress_callback, **options)
 
 
 def flatten_foreach_batch(
@@ -94,9 +89,6 @@ def flatten_foreach_batch(
     cfg = config or EngineConfig()
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        result: FlattenResult = flatten(batch_df, entity_name, cfg)
-        for name, table in result.all_tables.items():
-            target = os.path.join(output_path, sanitize_filename(name))
-            write_table(table, target, output_format, mode="append")
+        save_tables(flatten(batch_df, entity_name, cfg), output_path, output_format, mode="append")
 
     return handle
